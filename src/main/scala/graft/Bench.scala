@@ -27,8 +27,8 @@ package graft
 object Bench {
 
   /** Minimal JSON string escaping for the hand-built artifact lines
-    * (shared with CellDecadeProbe — r13 advice: an interpolated path
-    * containing a quote/backslash made the probe's line unparseable).
+    * (r13 advice: an interpolated path containing a quote/backslash
+    * made an artifact line unparseable).
     */
   def esc(s: String): String =
     s.flatMap {
@@ -39,13 +39,21 @@ object Bench {
     }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    // the production session factory — Bench/Verify/Profile must all
-    // measure the SAME configuration users run
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val sfDir = GraftSession.envOr("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val passes = GraftSession.envLong("SPARK_GRAFT_BENCH_PASSES", 2L).toInt
+    // SPARK_GRAFT_BENCH_ONLY=q97_link_pagerank,q31_... restricts the
+    // sweep (the sf1 scaling runs time only the top-10 most expensive
+    // queries; a full sweep leaves it unset)
+    val only = GraftSession
+      .env("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    // the production session factory — Bench and Verify must both
+    // run the SAME configuration users run
+    val spark = GraftSession.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT/codegen/scan init otherwise lands entirely on
     // the alphabetically-first query and distorts its number. Scans
@@ -58,23 +66,13 @@ object Bench {
     // sweeps) — in a full sweep a missing/corrupt table is a setup error
     // that must fail HERE, not surface as cold I/O inside the first
     // measured query that touches it (r16 ADVICE)
-    val restricted = sys.env.contains("SPARK_GRAFT_SCALE_TABLES") || sys.env.contains("SPARK_GRAFT_BENCH_ONLY")
+    val restricted = GraftSession.env("SPARK_GRAFT_SCALE_TABLES").isDefined || only.isDefined
     graft.sources.Tables.All.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").write.format("noop").mode("overwrite").save()
       catch {
         case e: org.apache.spark.sql.AnalysisException if restricted =>
           System.err.println(s"[bench] WARMUP SKIPPED for missing table $t (restricted run): ${e.getMessage.linesIterator.next()}")
       }
-    }
-    // SPARK_GRAFT_BENCH_ONLY=q97_link_pagerank,q31_... restricts the
-    // sweep (the sf1 scaling runs time only the top-10 most expensive
-    // queries; the driver leaves it unset)
-    val only = sys.env
-      .get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     }
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     // Price the one-off cell-partition training as its OWN entry (the
@@ -84,13 +82,10 @@ object Bench {
     // consumer's pass-1 ever paid it. Dropping the table first makes
     // the number deterministic (train + bucketed write + stamps), and
     // the sweep's consumers then read the warm index in BOTH passes,
-    // so their rows are purely the read path. Skippable for derived-SF
-    // sweeps that restrict to non-cell queries.
-    // auto-skip when the (restricted) sweep contains no consumer of
-    // the shared cell index — a derived-SF run timing only non-cell
-    // queries shouldn't pay (or need an extra env var to avoid) a
-    // training run nothing will read. SPARK_GRAFT_BENCH_CELL_BUILD=1
-    // forces the build anyway, =0 forces the skip.
+    // so their rows are purely the read path. Skipped when the
+    // (restricted) sweep contains no consumer of the shared cell
+    // index — a derived-SF run timing only non-cell queries shouldn't
+    // pay a training run nothing will read.
     val cellConsumerNames = Set(
       "q82_knn_join",
       "q129_semantic_dedup",
@@ -99,8 +94,7 @@ object Bench {
       "q142_cell_occupancy"
     )
     val cellBuildSec: Option[Double] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_CELL_BUILD").contains("0")) None
-      else if (!sys.env.get("SPARK_GRAFT_BENCH_CELL_BUILD").contains("1") && !names.exists(cellConsumerNames)) None
+      if (!names.exists(cellConsumerNames)) None
       else {
         graft.queries.DedupSimQueries.cellIndexDrop(spark, sfDir)
         val t0 = System.nanoTime()
@@ -185,17 +179,10 @@ object Bench {
     // one number masquerade as a plan regression until a separate
     // INDEX_COSTS run adjudicates it (q117's ×1.62 in r13). Emit the
     // per-family phase split into THIS artifact (one pass — the
-    // totals above stay the min-of-passes continuity numbers; the
-    // standalone IndexCosts main remains the min-of-2 deep probe).
-    // Default on for full sweeps, off for restricted ones
-    // (SPARK_GRAFT_BENCH_PHASES=1/0 forces).
-    val phasesWanted = sys.env.get("SPARK_GRAFT_BENCH_PHASES") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ => only.isEmpty
-    }
+    // totals above stay the min-of-passes continuity numbers). Full
+    // sweeps only; restricted ones skip it.
     val phaseSplits: Seq[(String, IndexCosts.Phases)] =
-      if (!phasesWanted) Nil
+      if (only.isDefined) Nil
       else
         IndexCosts.phaseRunners(spark, sfDir).map { case (n, run) =>
           n -> (try run()
@@ -236,16 +223,13 @@ object Bench {
     // q129 executes first in the sweep) is purely the read-path cost
     val cellConsumers = cellConsumerNames.toSeq.sorted.filter(timings.contains)
     val cc = cellConsumers.map(n => s""""${esc(n)}"""").mkString("[", ",", "]")
-    // THE WHOLE ARTIFACT GOES TO A FILE (round 11): the driver's
-    // stdout capture window is ~2000 chars, and 141 queries × ~28
-    // chars can never fit it — BENCH_r10 lost the per-query numbers
-    // for q100-q141 (alphabetically EARLY: "q100" < "q10_") to the
-    // tail truncation. The file is the authoritative record the next
-    // round's judge diffs; the driver's end-of-round commit picks it
-    // up. Override the location with SPARK_GRAFT_BENCH_OUT (the
-    // scaling sweeps do, so derived-SF runs don't clobber the sf0.1
-    // record).
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_QUERIES.json")
+    // THE WHOLE ARTIFACT GOES TO A FILE: 141 queries × ~28 chars do
+    // not fit a one-line stdout record that a caller may truncate, so
+    // the file is the authoritative per-query record. It defaults to
+    // BENCH_QUERIES.json in the working directory; override the
+    // location with SPARK_GRAFT_BENCH_OUT (the scaling sweeps do, so
+    // derived-SF runs don't clobber the sf0.1 record).
+    val outFile = GraftSession.envOr("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
     val cellField = cellBuildSec.map(s => s""""cell_index_build_sec":${math.round(s * 1000) / 1000.0},""").getOrElse("")
     val fileJson =
       s"""{"metric":"total","unit":"sec","passes":$passes,"sf":"$sfDir",

@@ -14,29 +14,76 @@ import org.apache.spark.sql.SparkSession
   *     determinism.
   */
 object GraftSession {
-  /** Numeric env knob that a unit suffix gets appended to: fail with a
-    * message naming the VARIABLE, not Spark's opaque byte-string parse
-    * error three frames later (r19 ADVICE).
+
+  /** Every SPARK_GRAFT_* variable graft reads, each with its value
+    * check: run selection and deployment paths, plus the three decade
+    * levers the SCALING_r17/r18 runs needed to finish at 2048× (AQE
+    * initial factor and advisory size, checkpoint storage level).
+    * Concluded A/B knobs are constants at their measured values below.
     */
-  private def envLong(name: String, default: Long): Long =
-    sys.env.get(name) match {
-      case None => default
-      case Some(v) =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$name must be a plain number (a unit suffix is appended internally); got '$v'")
-        }
+  private val EnvChecks: Map[String, String => Boolean] = {
+    val text: String => Boolean = _ => true
+    val positive: String => Boolean = _.toLongOption.exists(_ >= 1)
+    Map(
+      "SPARK_GRAFT_SF_DIR" -> text,
+      "SPARK_GRAFT_CPUS" -> positive,
+      "SPARK_GRAFT_ONLY" -> text,
+      "SPARK_GRAFT_BENCH_PASSES" -> positive,
+      "SPARK_GRAFT_BENCH_ONLY" -> text,
+      "SPARK_GRAFT_BENCH_OUT" -> text,
+      "SPARK_GRAFT_OBSERVE" -> Set("0", "1"),
+      "SPARK_GRAFT_SCALE_REPLICAS" -> positive,
+      "SPARK_GRAFT_SCALE_TABLES" -> text,
+      "SPARK_GRAFT_AQE_INITIAL_FACTOR" -> positive,
+      "SPARK_GRAFT_AQE_ADVISORY_MB" -> positive,
+      "SPARK_GRAFT_CKPT_LEVEL" -> Set("MEMORY_AND_DISK", "MEMORY_AND_DISK_SER", "DISK_ONLY")
+    )
+  }
+
+  /** The trimmed value of a listed SPARK_GRAFT_* variable in `vars`.
+    * Throws IllegalArgumentException naming the variable when the name
+    * is not listed or the value fails its check — never a parse error
+    * three frames later, never a silent fallback to the default.
+    */
+  def env(name: String, vars: Map[String, String] = sys.env): Option[String] = {
+    val check = EnvChecks.getOrElse(
+      name,
+      throw new IllegalArgumentException(
+        s"$name is not a graft setting; graft reads only ${EnvChecks.keys.toSeq.sorted.mkString(", ")}")
+    )
+    vars.get(name).map(_.trim).map { v =>
+      if (!check(v)) throw new IllegalArgumentException(s"$name has a malformed value '$v'")
+      v
     }
+  }
 
-  // SHJ local-map threshold only. The AQE advisory partition size is
-  // defaulted INDEPENDENTLY to 64m below — the SMJ→SHJ conversion
-  // engages only when a campaign exports SPARK_GRAFT_AQE_ADVISORY_MB
-  // down to this threshold (see the conversion-gate comment).
-  private def shjLocalMapMb: Long = envLong("SPARK_GRAFT_SHJ_LOCALMAP_MB", 16L)
+  /** [[env]] with a default for the text variables (paths, lists). */
+  def envOr(name: String, default: String, vars: Map[String, String] = sys.env): String =
+    env(name, vars).getOrElse(default)
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** [[env]] for the numeric variables (a unit suffix, where there is
+    * one, is appended by the caller).
+    */
+  def envLong(name: String, default: Long, vars: Map[String, String] = sys.env): Long =
+    env(name, vars).fold(default)(_.toLong)
+
+  /** Check every SPARK_GRAFT_* variable in `vars` through [[env]]: a
+    * script that still exports a retired knob fails loudly here
+    * instead of being silently ignored. Every session build runs it.
+    */
+  def checkEnv(vars: Map[String, String] = sys.env): Unit =
+    vars.keys.filter(_.startsWith("SPARK_GRAFT_")).foreach(env(_, vars))
+
+  /** [[builder]] at `local[SPARK_GRAFT_CPUS]` (default 32) — the
+    * session the Bench, Verify, PlanDump and ScaleUp mains run.
+    */
+  def localBuilder(): SparkSession.Builder = {
+    val cpus = envLong("SPARK_GRAFT_CPUS", 32L).toInt
+    builder(s"local[$cpus]", cpus)
+  }
+
+  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder = {
+    checkEnv()
     SparkSession
       .builder()
       .master(master)
@@ -53,17 +100,14 @@ object GraftSession {
       // decade the wide self-join sorts run 8-way finer instead of
       // going allocation-bound at 32 (measured 43.8 s -> ~10 s on
       // q34). On a real cluster the same knob scales with executor
-      // count. SPARK_GRAFT_AQE_INITIAL_FACTOR / _PARALLELISM_FIRST
-      // exist for A/B adjudication runs only — defaults are the
+      // count. SPARK_GRAFT_AQE_INITIAL_FACTOR is a decade lever (the
+      // SCALING_r17/r18 2048× runs raised it); the default is the
       // product setting.
       .config(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (shufflePartitions * sys.env.getOrElse("SPARK_GRAFT_AQE_INITIAL_FACTOR", "8").toInt).toString
+        (shufflePartitions * envLong("SPARK_GRAFT_AQE_INITIAL_FACTOR", 8L)).toString
       )
-      .config(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-      )
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       // parallelismFirst targets totalBytes/parallelism per partition
       // but never goes below minPartitionSize — so a CPU-DENSE stage
       // whose bytes are small (a GK-sketch merge, a 150k-key distinct
@@ -77,16 +121,11 @@ object GraftSession {
       // ways at sf0.1 (r19, same-era full-bench A-B-A: 146.6 s at 64k
       // vs 153.4 at 1m, wins spread over the window/sketch/distinct
       // families; a 20-query probe set agreed) — see
-      // OPTIMIZATION_r19.md Finding 6. Env-tunable for campaigns;
-      // decade-scale stages are GBs and never near either floor.
-      // the env value is validated NUMERIC before the unit suffix is
-      // appended (r19 ADVICE: an operator exporting "1m" — plausible
-      // next to the _ADVISORY_MB knob — produced "1mk" and killed
-      // session construction with an opaque byte-string parse error)
-      .config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        s"${envLong("SPARK_GRAFT_AQE_MIN_PARTITION_KB", 64L)}k"
-      )
+      // OPTIMIZATION_r19.md Finding 6. Lower floors lose: 16k/8k
+      // measured +10.8 to +14.8 s suite-wide in an r20 same-era
+      // bracket (tools/r20/aba_mps_*.json). Decade-scale stages are
+      // GBs and never near any of these floors.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         s"${envLong("SPARK_GRAFT_AQE_ADVISORY_MB", 64L)}m"
@@ -121,16 +160,12 @@ object GraftSession {
       // q107 1.5 vs 2.9 s — per-task hash-build overhead on hundreds
       // of KB-sized partitions across iterative stages), while at
       // decade geometry it removes the external sorts that ENOSPC'd
-      // r16. Decade campaign steps export
-      // SPARK_GRAFT_AQE_ADVISORY_MB=16 (= the threshold) to engage
-      // it; PlanSpec pins the converted no-sort shape under exactly
-      // that pairing. A cluster — where partitions are never tiny —
-      // sets the pairing on and raises SPARK_GRAFT_SHJ_LOCALMAP_MB
+      // r16. Decade runs export SPARK_GRAFT_AQE_ADVISORY_MB=16 (= the
+      // threshold) to engage it; PlanSpec pins the converted no-sort
+      // shape under exactly that pairing. A cluster — where partitions
+      // are never tiny — sets the pairing on and raises this threshold
       // to its per-core memory.
-      .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        s"${shjLocalMapMb}m"
-      )
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "16m")
       // ObjectHashAggregate falls back to SORT-BASED aggregation after
       // this many distinct keys per task — and the default (128) makes
       // EVERY per-doc/per-vector typed aggregate (graft_simhash,
@@ -147,13 +182,9 @@ object GraftSession {
       // this ObjectHashAggregate path — that is why keyClustered bounds
       // keys/task upstream of it (the r17 declarative rewrite was
       // measured slower and reverted in da1dc31; this comment is the
-      // recorded negative result).
-      // env-overridable (r17, ADVICE): the safe value is heap-dependent
-      // — campaigns at other heap sizes retune without a rebuild
-      .config(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK_KEYS", "32768")
-      )
+      // recorded negative result). The safe value is heap-dependent:
+      // 32k is sized for the 8 GB heap the measurements ran on.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "32768")
       // Scan-split size: the 128 MB default assumes scan-bound work,
       // but graft's hot pipelines are compute-AMPLIFYING — a shingle
       // explode turns each input row into ~150, so a 470 MB documents
@@ -164,7 +195,7 @@ object GraftSession {
       // the corpus; every sf0.1 table is a single ≤16 MB file, so the
       // driver-gate plans and timings are untouched. Map-side combine
       // output is unchanged — only the pre-shuffle parallelism moves.
-      .config("spark.sql.files.maxPartitionBytes", s"${envLong("SPARK_GRAFT_MAX_PARTITION_MB", 16L)}m")
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       // Generated-class cache (STATIC conf, sized at first-session
       // creation): Spark keeps at most `maxEntries` compiled codegen
@@ -180,14 +211,11 @@ object GraftSession {
       // across passes 1/2); at 4096 pass-2 compile collapses to 0.8 s
       // and the sweep totals drop 140.9/129.8 -> 95.1/96.0 s (-30%,
       // 111 of 142 queries improve, zero regress beyond noise).
-      // Scale posture: this is DRIVER-side memory (~30-50 KB of
-      // bytecode per entry => ~100-200 MB metaspace at 4096), the
-      // exact trade a long-lived cluster driver wants; it does not
-      // touch executor memory or any plan shape.
-      .config(
-        "spark.sql.codegen.cache.maxEntries",
-        envLong("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", 4096L).toString
-      )
+      // Scale posture: the cache is per-JVM, so it exists in the
+      // driver AND in each executor, each paying ~30-50 KB of bytecode
+      // per entry (=> ~100-200 MB metaspace at 4096) — the trade a
+      // long-lived cluster wants; it does not change any plan shape.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Local mode has no executor exit to reap finished stages'
       // shuffle files — ContextCleaner only removes them after a full
       // GC collects the dropped ShuffleDependency, and the default
@@ -211,6 +239,7 @@ object GraftSession {
       // native type for; read as nanos-since-epoch long (exact).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+  }
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

@@ -7,46 +7,33 @@ import graft.queries.{DedupSimQueries, GraphQueries, TrainingQueries}
 import graft.sim.Similarity
 import graft.sources.Tables
 
-/** Split the three build+query bench totals into their steady-state
-  * parts (r11 verdict #6). q104/q117/q125 rebuild their persisted
+/** Steady-state phase prices for the persisted-index families
+  * (r11 verdict #6). q87/q104/q107/q117/q125 rebuild their persisted
   * index INSIDE the timed query in every bench pass — honest for a
   * from-scratch run, but a 100 TB cluster pays the build once per
-  * ingest batch and the query many times. This main times each
-  * builder's three phases separately:
+  * ingest batch and the query many times. Each runner times a
+  * builder's phases separately:
   *
-  *   - `rebuild_sec`: the full from-scratch index build over the
-  *     whole corpus (what the bench rows include today);
-  *   - `append_sec`: the incremental maintenance path — the newest
+  *   - `rebuild`: the full from-scratch index build over the whole
+  *     corpus (what the bench rows include);
+  *   - `append`: the incremental maintenance path — the newest
   *     1/DeltaMod of the corpus appended into an existing base index
   *     under the frozen layout/geometry (the machinery the append ≡
   *     rebuild specs already prove answer-invisible);
-  *   - `query_sec`: the pure read path over a warm, complete index.
+  *   - `query`: the pure read path over a warm, complete index;
+  *   - `compact`: one rewrite of the append-grown files.
   *
-  * The per-phase artifacts live under `*_costs` names so the sweep
-  * never clobbers the queries' own tables. Two passes, min per phase
-  * (the Bench estimator). One JSON line on stdout + a file at
-  * SPARK_GRAFT_COSTS_OUT (default /root/repo/INDEX_COSTS.json).
-  *
-  * Usage: sbt "runMain graft.IndexCosts"   (SPARK_GRAFT_SF_DIR as Bench)
+  * Bench emits one pass of these as its `index_phases` object.
   */
 object IndexCosts {
 
-  /** `compact` is -1 when a family run skipped the phase and is then
-    * omitted from artifacts (since r15 every family prices one — the
-    * shared Formats compaction generalized the r14 cell-only phase).
+  /** Phase seconds; `compact` is -1 when a run skipped the phase and
+    * is then omitted from artifacts.
     */
-  case class Phases(rebuild: Double, append: Double, query: Double, compact: Double = -1.0) {
-    def min(o: Phases): Phases =
-      Phases(
-        math.min(rebuild, o.rebuild),
-        math.min(append, o.append),
-        math.min(query, o.query),
-        if (compact < 0 || o.compact < 0) math.max(compact, o.compact) else math.min(compact, o.compact)
-      )
-  }
+  case class Phases(rebuild: Double, append: Double, query: Double, compact: Double = -1.0)
 
-  /** The six persisted-index families' phase runners, shared by this
-    * main and Bench's per-round phase-split emission (r13 verdict #5:
+  /** The six persisted-index families' phase runners, behind Bench's
+    * per-round phase-split emission (r13 verdict #5:
     * the headline bench conflates rebuild+append+query for the index
     * queries, so host wobble on one number took a separate
     * INDEX_COSTS run to adjudicate — now every bench artifact carries
@@ -297,41 +284,5 @@ object IndexCosts {
       "q125_ivfpq_topk" -> (() => ivfpqOnce()),
       "cell_index" -> (() => cellOnce())
     )
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same warmup contract as Bench: JIT + parquet reader init off the
-    // first timed phase
-    spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    Seq("lineitem", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").write.format("noop").mode("overwrite").save()
-    }
-    // SPARK_GRAFT_COSTS_ONLY=cell_index restricts the run (scaling
-    // adjudications isolate one builder in a fresh JVM)
-    val only = sys.env.get("SPARK_GRAFT_COSTS_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val builders = phaseRunners(spark, sfDir).filter(b => only.forall(_.contains(b._1)))
-    val results = builders.map { case (name, run) =>
-      name -> (1 to passes).map(_ => run()).reduce(_ min _)
-    }
-    val mod = GraphQueries.DeltaMod
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-    val body = results
-      .map { case (n, p) =>
-        val compactField = if (p.compact >= 0) s""","compact_sec":${r3(p.compact)}""" else ""
-        s""""$n":{"rebuild_sec":${r3(p.rebuild)},"append_sec":${r3(p.append)},"query_sec":${r3(p.query)}$compactField}"""
-      }
-      .mkString(",")
-    val json =
-      s"""{"sf":"$sfDir","passes":$passes,"batch_fraction":${1.0 / mod},"builders":{$body}}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_COSTS_OUT", "/root/repo/INDEX_COSTS.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
-    catch { case e: Throwable => System.err.println(s"[costs] could not write $outFile: ${e.getMessage}") }
-    println(json)
-    spark.stop()
   }
 }

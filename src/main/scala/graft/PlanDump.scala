@@ -18,9 +18,8 @@ object PlanDump {
     val suffix = args(1)
     val filters = args.drop(2)
     java.nio.file.Files.createDirectories(outDir)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val sfDir = GraftSession.envOr("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>

@@ -1,36 +1,32 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check_oracle.py. A query that
+  * throws is reported by name once oracle_sql.json is written, and the
+  * run exits 1 — a broken query must not look like a missing dump.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // a leaked scaling-adjudication pin would make the engine disagree
-    // with the oracle's corpus-scaled CASE chain BY DESIGN — refuse,
-    // don't let the round's correctness silently fail (r12 advice)
-    require(
-      sys.env.get("SPARK_GRAFT_PIN_EMB_PLANES").isEmpty,
-      "SPARK_GRAFT_PIN_EMB_PLANES is set — the q34 plane pin is for scaling adjudication only " +
-        "and breaks the oracle compare; unset it before running Verify"
-    )
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q97_link_pagerank,q98_... dumps just those
     // queries (local iteration aid; the driver leaves it unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = GraftSession.env("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // fail loudly on a typo'd name — a silent empty dump reads as a pass
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
       require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
     }
-    SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -49,5 +45,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

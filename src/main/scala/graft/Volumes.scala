@@ -32,7 +32,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object Volumes {
 
-  @volatile private var enabled = sys.env.get("SPARK_GRAFT_OBSERVE").contains("1")
+  @volatile private var enabled = GraftSession.env("SPARK_GRAFT_OBSERVE").contains("1")
 
   // unique CollectMetrics names per plan (Spark requires uniqueness
   // within a query; reruns of the same query function mint new ones)

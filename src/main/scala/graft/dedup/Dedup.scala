@@ -124,14 +124,14 @@ object Dedup {
     *   - SPARK_GRAFT_CKPT_LEVEL=MEMORY_AND_DISK_SER: the middle
     *     ground (compact byte[] blocks in RAM).
     *
-    * The knob moves with deployment scale, not with the query — the
-    * decade campaign scripts set it once per run.
+    * The lever moves with deployment scale, not with the query — a
+    * decade run sets it once per run.
     */
   def checkpointHeavy(df: DataFrame): DataFrame =
     checkpointHeavy(df, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** [[checkpointHeavy]] with a caller-chosen DEFAULT storage level —
-    * the env knob still wins for campaign A/Bs. Callers pass
+    * SPARK_GRAFT_CKPT_LEVEL still wins when set. Callers pass
     * DISK_ONLY for frames that are corpus-PROPORTIONAL and re-read
     * only a handful of times (the Bm25 postings checkpoint): at
     * decade scale such a frame can never be memory-resident against
@@ -142,13 +142,9 @@ object Dedup {
     * churned 50-160 MB checkpoint partitions).
     */
   def checkpointHeavy(df: DataFrame, default: org.apache.spark.storage.StorageLevel): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val level = sys.env.get("SPARK_GRAFT_CKPT_LEVEL") match {
-      case Some("DISK_ONLY") => StorageLevel.DISK_ONLY
-      case Some("MEMORY_AND_DISK_SER") => StorageLevel.MEMORY_AND_DISK_SER
-      case Some("MEMORY_AND_DISK") => StorageLevel.MEMORY_AND_DISK
-      case _ => default
-    }
+    val level = graft.GraftSession
+      .env("SPARK_GRAFT_CKPT_LEVEL")
+      .fold(default)(org.apache.spark.storage.StorageLevel.fromString)
     df.localCheckpoint(true, level)
   }
 
@@ -199,8 +195,7 @@ object Dedup {
     * whose 118 GB spill the r18 probe attributed). Keys/task stays
     * ~constant as the corpus grows — the aggregate-state contract —
     * while a cluster that raises shuffle.partitions scales base and
-    * the cap with its estate. Deterministic for a given input;
-    * env-tunable for A/B campaigns like the session's other knobs.
+    * the cap with its estate. Deterministic for a given input.
     */
   def keyClustered(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(clusterWidth(df), cols: _*)
@@ -217,8 +212,7 @@ object Dedup {
   def keyClusteredWide(df: DataFrame, estPerPartKb: Long, cols: Column*): DataFrame =
     df.repartition(clusterWidth(df, estPerPartKb), cols: _*)
 
-  private[graft] def clusterWidth(df: DataFrame): Int =
-    clusterWidth(df, sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_EST_PER_PARTITION_KB", "128").toLong)
+  private[graft] def clusterWidth(df: DataFrame): Int = clusterWidth(df, 128L)
 
   private[graft] def clusterWidth(df: DataFrame, perPartKb: Long): Int = {
     val base = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -226,7 +220,6 @@ object Dedup {
     // (optimizedPlan would throw checkForBatch); keep the r17 width —
     // the streaming twins are correctness mirrors, not perf paths
     if (df.isStreaming) return 16 * base
-    val smallMb = sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_SMALL_MB", "4").toLong
     val plan = df.queryExecution.optimizedPlan
     val rawEst = plan.stats.sizeInBytes
     // Guard against DEGRADED estimates (r18 ADVICE): the size-only
@@ -241,7 +234,7 @@ object Dedup {
     // 64× the sum of leaf sizes and say so when the cap bites —
     // a silent correction here is how the r17 no-op class recurs.
     val leafSum = plan.collectLeaves().map(_.stats.sizeInBytes).sum
-    val ampCap = sys.env.getOrElse("SPARK_GRAFT_KEYCLUSTER_AMP_CAP", "64").toLong
+    val ampCap = 64L
     val est =
       if (leafSum > 0 && rawEst > leafSum * ampCap) {
         System.err.println(
@@ -249,7 +242,7 @@ object Dedup {
             "(degraded join/RDD stats?) — bounding the width estimate to the leaf sum x cap")
         leafSum * ampCap
       } else rawEst
-    if (est < BigInt(smallMb) * 1024 * 1024) base
+    if (est < BigInt(4) * 1024 * 1024) base
     else (est / (perPartKb * 1024)).min(128L * base).max(base).toInt
   }
 
@@ -285,9 +278,10 @@ object Dedup {
     * width lets SIGNATURE-ONLY consumers (one explode + one bounded
     * aggregate, no pair join back into the checkpoint) spread just
     * enough to amortize the explode without paying full-session task
-    * waves on every downstream KB-sized stage. The engagement gate is
-    * unchanged: identity whenever the scan itself can already feed
-    * the session (decade corpora, non-scan frames, streams).
+    * waves on every downstream KB-sized stage. Identity whenever the
+    * scan itself can already feed the session (decade corpora,
+    * non-scan frames, streams) — and, for a positive width, whenever
+    * the scan is already at least that wide (see [[spreadWidth]]).
     */
   def spreadScanTo(df: DataFrame, width: Int, cols: Column*): DataFrame = {
     if (df.isStreaming) return df
@@ -305,9 +299,19 @@ object Dedup {
           ((len + maxSplit - 1) / maxSplit).toInt
         }.sum
       } catch { case _: Throwable => cores } // unknowable → assume the scan is wide enough
-    if (splits >= cores) df
-    else df.repartition(if (width > 0) width else math.max(cores, clusterWidth(df)), cols: _*)
+    spreadWidth(splits, cores, width, math.max(cores, clusterWidth(df))).fold(df)(df.repartition(_, cols: _*))
   }
+
+  /** [[spreadScanTo]]'s width decision: None leaves the scan alone.
+    * A scan of `splits` splits is spread only when it cannot feed the
+    * `cores`; a positive `width` override never NARROWS it (10 splits
+    * at width 8 stay 10 splits — r20 ADVICE), width ≤ 0 takes
+    * `fullWidth`.
+    */
+  private[graft] def spreadWidth(splits: Int, cores: Int, width: Int, fullWidth: => Int): Option[Int] =
+    if (splits >= cores) None
+    else if (width > 0) Option.when(splits < width)(width)
+    else Some(fullWidth)
 
   /** Drop shingles whose document frequency exceeds `maxDf` before any
     * self-join. A corpus-common shingle (boilerplate, a hot trigram)
@@ -1359,8 +1363,8 @@ object Dedup {
     * RECALL CONTRACT (round-13 law certification against a salted
     * exact brute-force truth; round-14 MEASURED at the operating
     * point against planted controlled-cosine families —
-    * ScaleUp.PlantCosines, RecallProbe, SCALING_r14
-    * `q34_planted_recall`): per-pair recall at true cosine c is the
+    * ScaleUp.PlantCosines; tools/recall_100x.json, recall_256x.json and
+    * SCALING_r14 `q34_planted_recall`): per-pair recall at true cosine c is the
     * multi-table union R(c) = 1-(1-q^m)^L with q = 1-arccos(c)/π.
     * The r14 measurement validated the law (every planted band within
     * binomial 2σ, precision exactly 1.0) — and thereby exposed the
@@ -1440,7 +1444,7 @@ object Dedup {
     // external sorts (GraftSession): (a) AQE's runtime SMJ→shuffled-
     // hash conversion — NO sorts when every measured post-shuffle
     // partition fits the local-map threshold; OPT-IN for decade
-    // campaigns only (export SPARK_GRAFT_AQE_ADVISORY_MB=16): the
+    // runs only (export SPARK_GRAFT_AQE_ADVISORY_MB=16): the
     // default advisory stays 64m > the 16m threshold, which keeps
     // the conversion OFF because
     // DynamicJoinSelection.preferShuffledHashJoin requires
@@ -1449,9 +1453,10 @@ object Dedup {
     // the decade survived on lever (b) alone; engaging it by default
     // doubled the iterative kmeans family at sf0.1, so default-off);
     // (b) finer AQE initial partitions
-    // (SPARK_GRAFT_AQE_INITIAL_FACTOR on decade campaigns), which
+    // (SPARK_GRAFT_AQE_INITIAL_FACTOR on decade runs), which
     // keep any partition the conversion skips sorting IN MEMORY
-    // (stageprobe_q34_512x: 512-task reduce, zero spill). The two
+    // (tools/r18/stageprobe_q34_512x.json: 512-task reduce, zero
+    // spill). The two
     // join sides are the SAME exchange (canonically equal — no hint
     // to break it — so AQE's stage cache writes the shuffle once and
     // reads it twice), and per-bucket occupancy is bounded by the

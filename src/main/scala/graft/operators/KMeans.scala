@@ -107,8 +107,8 @@ object KMeans {
     * callers then keep the struct-min formulation. The max-cid probe
     * is one tiny job over the K-row centroid frame; Lloyd loops pay it
     * ONCE per refine ([[argminPackForMax]] — centroid IDS never change
-    * across rounds, only coordinates; the r19 probe measured the
-    * per-round re-probe as pure driver-job overhead: q119 spent ~half
+    * across rounds, only coordinates; r19 measured the per-round
+    * re-probe as pure driver-job overhead (OPTIMIZATION_r19.md): q119 spent ~half
     * its wall in ~40 tiny job launches).
     */
   private def argminPackFor(cents: DataFrame, dims: Int): Option[ArgminPack] = {
@@ -332,8 +332,9 @@ object KMeans {
     * path, the rank prefix for [[refineTwoLevelRankSeeded]]. `tick`
     * fires at each phase's MATERIALIZATION boundary (the eager
     * localCheckpoints that structure the computation anyway), so a
-    * build probe can decompose wall-clock per phase with zero extra
-    * work when unused (the default is a no-op).
+    * build can be decomposed into wall-clock per phase (the split in
+    * tools/r17/cellbuild_512x.json) with zero extra work when unused
+    * (the default is a no-op).
     */
   private def refineTwoLevelImpl(
       q: DataFrame,

@@ -241,7 +241,7 @@ object Bm25Index {
     // the scoring-aggregate bound (r19). Disk-backed residency costs
     // one serialized write + three reads of a frame this code was
     // about to materialize anyway; SPARK_GRAFT_CKPT_LEVEL still
-    // overrides for A/Bs.
+    // overrides it on decade runs.
     val post = graft.dedup.Dedup
       .checkpointHeavy(postings(docs, idCol, textCol), org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // df restricted to the QUERY's tokens before the forced broadcast

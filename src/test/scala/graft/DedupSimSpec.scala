@@ -864,4 +864,16 @@ class DedupSimSpec extends AnyFunSuite {
       "a fileless frame must pass through untouched"
     ) finally noFiles.unpersist()
   }
+
+  test("spreadWidth: a positive width never narrows a scan that is already at least that wide") {
+    import graft.dedup.Dedup.spreadWidth
+    // r20 ADVICE #2: 10 splits at width 8 on 32 cores used to be
+    // coalesced to 8 behind a shuffle — the scan must stay as it is
+    assert(spreadWidth(splits = 10, cores = 32, width = 8, fullWidth = 64).isEmpty)
+    assert(spreadWidth(splits = 1, cores = 32, width = 8, fullWidth = 64).contains(8))
+    // width ≤ 0 keeps the full default width; a scan that feeds every
+    // core is never touched
+    assert(spreadWidth(splits = 10, cores = 32, width = 0, fullWidth = 64).contains(64))
+    assert(spreadWidth(splits = 32, cores = 32, width = 8, fullWidth = 64).isEmpty)
+  }
 }

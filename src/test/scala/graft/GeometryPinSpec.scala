@@ -15,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-derived formulas — and fails on any change.
   *
   * IF THIS TEST FAILS: you changed the collision geometry. That is
-  * allowed, but a recall re-measurement is now OWED: re-run the
-  * planted-recall probe (graft.RecallProbe) at a decade SF, record the
-  * number in the round's SCALING artifact, bump
+  * allowed, but a recall re-measurement is now OWED: re-measure
+  * planted recall at a decade SF (method and last numbers:
+  * tools/recall_256x.json, SCALING_r15 `q34_planted_recall`), record
+  * the number in the round's SCALING artifact, bump
   * PortableHash.SignatureFormatVersion if signatures moved, and update
   * the stamp below IN THE SAME COMMIT.
   */
@@ -119,8 +120,8 @@ class GeometryPinSpec extends AnyFunSuite {
     assert(
       fp == stamped,
       s"LSH geometry fingerprint moved ($fp != stamped $stamped). The collision geometry behind " +
-        "every 'recall stands' declaration has changed: re-run the planted-recall probe " +
-        "(graft.RecallProbe) at a decade SF, record the recall in the round's SCALING artifact, " +
+        "every 'recall stands' declaration has changed: re-measure planted recall at a decade SF " +
+        "(method: tools/recall_256x.json), record the recall in the round's SCALING artifact, " +
         "bump PortableHash.SignatureFormatVersion if signature values moved, and update this " +
         "stamp in the same commit."
     )

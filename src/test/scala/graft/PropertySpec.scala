@@ -17,6 +17,13 @@ import graft.streaming.Events
 class PropertySpec extends AnyFunSuite {
   import TestSpark._
 
+  /** The multi-table union recall law at true cosine c (m planes per
+    * table, L tables): collision prob per plane q = 1 - arccos(c)/π —
+    * the reference formula the q34 recall contract is checked against.
+    */
+  private def law(c: Double, m: Int, l: Int): Double =
+    1.0 - math.pow(1.0 - math.pow(1.0 - math.acos(c) / math.Pi, m), l)
+
   test("portable hash and minhash permutations stay in range on random inputs") {
     import graft.functions.PortableHash._
     val rnd = new Random(7)
@@ -816,12 +823,12 @@ class PropertySpec extends AnyFunSuite {
       val l = embTablesForPlanes(m)
       assert(l >= 1 && l <= MaxEmbTables)
       assert(
-        RecallProbe.law(RecallContractCosine, m, l) >= RecallContractTarget,
+        law(RecallContractCosine, m, l) >= RecallContractTarget,
         s"m=$m: L=$l does not hold R($RecallContractCosine) >= $RecallContractTarget"
       )
       if (l > 1)
         assert(
-          RecallProbe.law(RecallContractCosine, m, l - 1) < RecallContractTarget,
+          law(RecallContractCosine, m, l - 1) < RecallContractTarget,
           s"m=$m: L=$l is not minimal"
         )
     }
